@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from etl_caltopo_spark.caltopo.columns import per_gateway
 from etl_caltopo_spark.caltopo.schemas import ENVELOPE_SCHEMA
 
 
@@ -37,10 +38,23 @@ def decode_envelope(
     execution time when the envelope shape is wrong.  ``strict=False``
     is the PERMISSIVE mode: bad envelopes yield zero feature rows.
     """
-    parsed = envelopes.withColumn(
-        "_env",
-        F.from_json(F.col(body_col), ENVELOPE_SCHEMA, {"mode": "FAILFAST"}),
+    # carry the envelope identity (map/share id) so multi-map batches
+    # keep per-map scope downstream — the folder lookup is per map
+    scoped = "share_id" in envelopes.columns
+    env, keep, exploded, flat = _decode_columns(body_col, strict, scoped)
+    return (
+        envelopes.withColumn("_env", env)
+        .filter(keep)
+        .select(*exploded)
+        .select(*flat)
     )
+
+
+@per_gateway
+def _decode_columns(body_col: str, strict: bool, scoped: bool):
+    """The Columns of :func:`decode_envelope`: the parsed envelope,
+    the row filter, the explode projection and the flat projection."""
+    env = F.from_json(F.col(body_col), ENVELOPE_SCHEMA, {"mode": "FAILFAST"})
     if strict:
         valid = (
             F.col("_env").isNotNull()
@@ -52,25 +66,20 @@ def decode_envelope(
         # evaluate the assertion): assert_true returns null on
         # success, so isNull() is an always-true filter that throws on
         # invalid envelopes.
-        parsed = parsed.filter(
-            F.assert_true(
-                valid,
-                F.concat(F.lit("envelope failed schema validation: "), F.col(body_col)),
-            ).isNull()
-        )
+        keep = F.assert_true(
+            valid,
+            F.concat(F.lit("envelope failed schema validation: "), F.col(body_col)),
+        ).isNull()
     else:
-        parsed = parsed.filter(F.col("_env.result.state.features").isNotNull())
-    ts_col = F.col("_env.result.timestamp")
-    # carry the envelope identity (map/share id) so multi-map batches
-    # keep per-map scope downstream — the folder lookup is per map
-    carry = [c for c in ("share_id",) if c in envelopes.columns]
-    feats = parsed.select(
+        keep = F.col("_env.result.state.features").isNotNull()
+    carry = (F.col("share_id"),) if scoped else ()
+    exploded = (
         *carry,
-        ts_col.alias("state_timestamp"),
+        F.col("_env.result.timestamp").alias("state_timestamp"),
         F.explode("_env.result.state.features").alias("f"),
     )
     p = "f.properties"
-    return feats.select(
+    flat = (
         *carry,
         F.col("f.id").alias("id"),
         F.col(f"{p}.class").alias("class"),
@@ -94,5 +103,6 @@ def decode_envelope(
         F.col(f"{p}.icon").alias("icon"),
         F.col("f.geometry.type").alias("geometry_type"),
         F.col("f.geometry.coordinates").alias("geometry_json"),
-        "state_timestamp",
+        F.col("state_timestamp"),
     )
+    return env, keep, exploded, flat

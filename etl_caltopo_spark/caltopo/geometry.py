@@ -20,6 +20,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
+from etl_caltopo_spark.caltopo.columns import per_gateway
+
 #: JSON schema (DDL) of the coordinates array per geometry type
 _DEPTH_SCHEMAS = {
     1: "array<double>",
@@ -95,6 +97,12 @@ def truncate_coordinates(
     Arrow batch ships a null column and the walker's per-row work for
     standard rows is a single None check, keeping the whole-corpus
     cost of the fallback proportional to the ragged rows only."""
+    return df.withColumn(json_col, _truncation(type_col, json_col, keep))
+
+
+@per_gateway
+def _truncation(type_col: str, json_col: str, keep: int) -> Column:
+    """The typed truncation CASE of :func:`truncate_coordinates`."""
     t = F.col(type_col)
     j = F.col(json_col)
     standard = t.isin(
@@ -106,7 +114,7 @@ def truncate_coordinates(
     walker_input = F.when(
         ~F.coalesce(standard, F.lit(False)) & j.isNotNull(), j
     )
-    expr = (
+    return (
         F.when(j.isNull(), F.lit(None).cast("string"))
         .when(t == "Point", _truncate_typed(j, 1, keep))
         .when((t == "MultiPoint") | (t == "LineString"), _truncate_typed(j, 2, keep))
@@ -114,4 +122,3 @@ def truncate_coordinates(
         .when(t == "MultiPolygon", _truncate_typed(j, 4, keep))
         .otherwise(_truncate_walker(walker_input))
     )
-    return df.withColumn(json_col, expr)

@@ -18,14 +18,21 @@ import json
 import os
 from collections.abc import Callable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from etl_caltopo_spark.caltopo.schemas import ENV_DEFAULTS, ENV_SCHEMA
 
 Fetcher = Callable[[str], str]
 
 BASE_URL = "https://caltopo.com"
+
+#: the (share_id, body_json) envelope rows every source returns
+ENVELOPE_ROWS = StructType(
+    [StructField("share_id", StringType()), StructField("body_json", StringType())]
+)
 
 
 def validate_env(env: dict) -> dict:
@@ -63,10 +70,21 @@ def fetch_envelopes(
 ) -> DataFrame:
     """GET each map's state and wrap the raw bodies as a DataFrame
     (``share_id``, ``body_json``).  One row per map: the fan-out
-    across thousands of maps is rows, not driver loops downstream."""
+    across thousands of maps is rows, not driver loops downstream.
+
+    The rows reach the JVM as one Arrow table, so Spark plans them as
+    a ``LocalRelation``: one partition, no Python worker in any task,
+    whatever the session's Arrow conf and also for zero maps.  A
+    Python list would become a pickled PythonRDD whose every task
+    (empty slices too) starts a Python worker, which at one map per
+    run costs more than the map's data work."""
     fetcher = fetcher or default_fetcher
-    rows = [(sid, fetcher(map_state_url(sid, since))) for sid in share_ids]
-    return spark.createDataFrame(rows, "share_id string, body_json string")
+    bodies = [fetcher(map_state_url(sid, since)) for sid in share_ids]
+    table = pa.table(
+        [pa.array(share_ids, pa.string()), pa.array(bodies, pa.string())],
+        names=ENVELOPE_ROWS.names,
+    )
+    return spark.createDataFrame(table, ENVELOPE_ROWS)
 
 
 def envelopes_from_jsonl(spark: SparkSession, path: str) -> DataFrame:

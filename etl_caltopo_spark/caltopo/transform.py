@@ -6,9 +6,10 @@ resolved per SURVEY §1.5 (uniform ``isNotNull``; absent ≡ null).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from etl_caltopo_spark.caltopo.columns import per_gateway
 from etl_caltopo_spark.caltopo.geometry import truncate_coordinates
 from etl_caltopo_spark.operators.joins import broadcast_lookup_join
 
@@ -48,20 +49,34 @@ def split_folders(features: DataFrame) -> tuple[DataFrame, DataFrame]:
     runs one map per invocation (CHANGELOG.md:63), so folder ids are
     only meaningful within their own map.
     """
-    scope = [c for c in ("share_id",) if c in features.columns]
-    folders = features.filter(F.col("class") == "Folder").select(
-        *scope,
-        F.col("id").alias("folder_key"),
-        F.col("title").alias("folder_title"),
-    )
-    rest = features.filter(F.col("class") != "Folder")
+    scoped = "share_id" in features.columns
+    is_folder, not_folder, folder_cols = _folder_columns(scoped)
+    folders = features.filter(is_folder).select(*folder_cols)
+    rest = features.filter(not_folder)
     return folders, rest
+
+
+@per_gateway
+def _folder_columns(scoped: bool) -> tuple[Column, Column, tuple[Column, ...]]:
+    """The two split predicates and the folder-dimension projection of
+    :func:`split_folders`."""
+    scope = (F.col("share_id"),) if scoped else ()
+    return (
+        F.col("class") == "Folder",
+        F.col("class") != "Folder",
+        (*scope, F.col("id").alias("folder_key"), F.col("title").alias("folder_title")),
+    )
 
 
 def drop_null_geometry(features: DataFrame) -> DataFrame:
     """R6 (task.ts:97-100): features without geometry are dropped
     (SARTopo 'Operational Periods', CHANGELOG.md:130-132)."""
-    return features.filter(F.col("geometry_type").isNotNull())
+    return features.filter(_has_geometry())
+
+
+@per_gateway
+def _has_geometry() -> Column:
+    return F.col("geometry_type").isNotNull()
 
 
 def to_input_features(features: DataFrame) -> DataFrame:
@@ -80,6 +95,13 @@ def to_input_features(features: DataFrame) -> DataFrame:
     - all source properties under metadata          (R7,  task.ts:107)
     """
     truncated = truncate_coordinates(features)
+    scoped = "share_id" in truncated.columns
+    return truncated.select(*_input_feature_columns(scoped))
+
+
+@per_gateway
+def _input_feature_columns(scoped: bool) -> tuple[Column, ...]:
+    """The InputFeature projection of :func:`to_input_features`."""
     is_point = F.col("geometry_type") == "Point"
     has_marker = is_point & F.col("marker_color").isNotNull()
 
@@ -94,10 +116,10 @@ def to_input_features(features: DataFrame) -> DataFrame:
         has_marker, F.map_filter(metadata, lambda k, v: k != F.lit("marker-color"))
     ).otherwise(metadata)
 
-    scope = [c for c in ("share_id",) if c in truncated.columns]
-    return truncated.select(
+    scope = (F.col("share_id"),) if scoped else ()
+    return (
         *scope,
-        "id",
+        F.col("id"),
         F.lit("Feature").alias("type"),
         F.col("title").cast("string").alias("callsign"),
         F.coalesce(F.col("description").cast("string"), F.lit("")).alias("remarks"),
@@ -122,9 +144,9 @@ def to_input_features(features: DataFrame) -> DataFrame:
         ).alias("stroke_width"),
         F.when(F.col("icon").isNotNull(), F.col("icon").cast("string")).alias("icon"),
         metadata.alias("metadata"),
-        "folder_id",
-        "geometry_type",
-        "geometry_json",
+        F.col("folder_id"),
+        F.col("geometry_type"),
+        F.col("geometry_json"),
     )
 
 
@@ -144,6 +166,9 @@ def attach_folder_paths(features: DataFrame, folders: DataFrame) -> DataFrame:
         folders = scoped
         drop_cols.append("_folder_share")
     joined = broadcast_lookup_join(features, folders, cond, "left")
-    return joined.withColumn(
-        "path", F.concat(F.lit("/"), F.col("folder_title"))
-    ).drop(*drop_cols)
+    return joined.withColumn("path", _folder_path()).drop(*drop_cols)
+
+
+@per_gateway
+def _folder_path() -> Column:
+    return F.concat(F.lit("/"), F.col("folder_title"))

@@ -112,16 +112,22 @@ def parquet_ts_bounds(sf_dir: str, name: str, col: str):
     else:
         return None
     try:
-        import pyarrow.parquet as pq
-    except ImportError:  # pragma: no cover - pyarrow ships with pyspark
+        return _footer_ts_bounds(files, col)
+    except Exception:
+        # no pyarrow, an unreadable footer, or a stats value pyarrow
+        # cannot decode (OverflowError on a timestamp outside
+        # datetime's range): unproven, so the caller runs the aggregate
         return None
+
+
+def _footer_ts_bounds(files: list[str], col: str):
+    """The footer walk of :func:`parquet_ts_bounds`; may raise."""
+    import pyarrow.parquet as pq
+
     lo = hi = None
     saw_value = False
     for f in files:
-        try:
-            md = pq.ParquetFile(f).metadata
-        except Exception:
-            return None
+        md = pq.ParquetFile(f).metadata
         sch = md.schema
         idx = next(
             (j for j in range(md.num_columns) if sch.column(j).path == col),

@@ -50,9 +50,10 @@ def build_spark(
 ) -> SparkSession:
     """Build (or fetch) the engine SparkSession.
 
-    ``shuffle_partitions`` defaults to the core count of the local
-    master; on a real cluster it should be set to ~2-3x total cores (or
-    left to AQE's coalescing with a high initial value).
+    ``shuffle_partitions`` defaults to 32 (or
+    ``SPARK_GRAFT_SHUFFLE_PARTITIONS``), whatever the core count; AQE
+    coalesces small shuffles below it.  On a real cluster set it to
+    ~2-3x total cores (or leave AQE a high initial value).
     """
     builder = SparkSession.builder.appName(app_name).master(master or default_master())
     for k, v in BUILD_CONF.items():

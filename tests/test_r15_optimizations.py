@@ -196,6 +196,60 @@ def test_parquet_ts_bounds_refuses_unprovable():
     ) is None
 
 
+def test_parquet_ts_bounds_refuses_undecodable_stats(tmp_path):
+    """A µs NTZ max past year 9999 has valid footer stats that pyarrow
+    cannot decode (OverflowError): refuse, never raise."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from etl_caltopo_spark.io import parquet_ts_bounds
+
+    year_10000_us = 253402300800 * 10**6
+    ts = pa.array([0, year_10000_us], pa.timestamp("us"))
+    pq.write_table(pa.table({"ts": ts}), str(tmp_path / "events.parquet"))
+    assert parquet_ts_bounds(str(tmp_path), "events", "ts") is None
+
+
+class _StatsDecodeFails:
+    """Footer proxy whose statistics ``min`` raises the way pyarrow's
+    decode of an out-of-range timestamp does; everything else is the
+    real footer."""
+
+    def __init__(self, inner):
+        self._inner = inner
+
+    def __getattr__(self, name):
+        if name == "min":
+            raise OverflowError("date value out of range")
+        value = getattr(self._inner, name)
+        if name in ("row_group", "column"):
+            return lambda *a: _StatsDecodeFails(value(*a))
+        if name in ("metadata", "statistics"):
+            return _StatsDecodeFails(value)
+        return value
+
+
+def test_parquet_ts_bounds_decode_error_falls_back_to_agg(spark, monkeypatch):
+    """A stats decode error makes the probe take the Spark aggregate,
+    and the bounds it returns equal the aggregate's."""
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from etl_caltopo_spark.io import parquet_ts_bounds
+    from etl_caltopo_spark.queries.stream_windows import _ts_bounds
+
+    sf_dir = SF_DIRS[0]
+    if not os.path.isdir(sf_dir):
+        pytest.skip(f"{sf_dir} absent")
+    real = pq.ParquetFile
+    monkeypatch.setattr(pq, "ParquetFile", lambda f: _StatsDecodeFails(real(f)))
+    assert parquet_ts_bounds(sf_dir, "events", "ts") is None
+    ev = load_table(spark, sf_dir, "events")
+    row = ev.agg(F.min("ts").alias("lo"), F.max("ts").alias("hi")).first()
+    assert row["lo"] is not None
+    assert _ts_bounds(sf_dir, ev) == {"lo": row["lo"], "hi": row["hi"]}
+
+
 # ---------------------------------------------------------------------------
 # 5. column-wise sequential norm fold (guide §4.2): the per-block
 #    pandas helpers replaced their O(n·d) per-row Python norm loop
